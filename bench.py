@@ -288,15 +288,9 @@ def run_bigseen_bench(n_seen: int, n_cands: int) -> dict:
     out["bloom_suspects"] = suspects
     out["bloom_join_skip_frac"] = round(1 - suspects / n_cands, 4)
     out["bloom_bits_per_block"] = bits
-    # round-5 gate evidence: the path the engine actually picks (the
-    # seen table here is scannable, so the gate must choose exact — and
-    # the chosen path's time must be <= the alternatives')
-    from openslack_crawler_spark.operators.seen_filter import choose_unseen_path
-
-    chosen = (
-        "exact_spj" if choose_unseen_path(seen_scannable=True) == "exact"
-        else "bloom_spj"
-    )
+    # the path the engine uses by default (CrawlConfig.use_bloom=False:
+    # exact anti-join) — its time must be <= the alternatives'
+    chosen = "exact_spj"
     out["chosen_path"] = chosen
     out["chosen_sec"] = out[chosen]["sec"]
     spark.sql("DROP TABLE IF EXISTS bigseen")

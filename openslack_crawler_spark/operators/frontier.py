@@ -28,6 +28,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..schemas import FRONTIER_SCHEMA
+from . import sequence
+from .components import _ckpt
+
 DEPTH_DECAY = 10  # link_spider.py:81
 RETRY_DECAY = 10  # redis_retry.py:20
 DEFAULT_SALT_BUCKETS = 16
@@ -113,6 +117,41 @@ def mark_enqueue_filters(
 def with_salt(df: DataFrame, buckets: int = DEFAULT_SALT_BUCKETS) -> DataFrame:
     """Hot-host salt bucket: deterministic pmod(url_hash, buckets)."""
     return df.withColumn("salt", F.pmod(F.col("url_hash"), F.lit(buckets)).cast("int"))
+
+
+def enqueue(
+    cands: DataFrame,
+    blacklist: DataFrame | None,
+    order_col: str,
+    next_seq: int,
+    salt_buckets: int = DEFAULT_SALT_BUCKETS,
+    checkpoint_dir: str | None = None,
+) -> tuple[DataFrame, DataFrame, int]:
+    """The push half of the enqueue pipeline (scheduler.py:87-103), run
+    on rows that already passed first-wins dedup and the seen check:
+    enqueue filters → dense enqueue_seq from next_seq in `order_col`
+    order → salt. Returns (frontier rows, seen rows, enqueued count).
+    The seen rows are every input row: accepted ones carry their
+    enqueue_seq as added_seq, filtered-out ones NULL (the dupefilter is
+    check-and-insert, so they stay fingerprinted)."""
+    flagged = _ckpt(mark_enqueue_filters(cands, blacklist), checkpoint_dir)
+    accepted = sequence.with_dense_seq(
+        flagged.filter(F.col("_enqueue_ok")), [F.col(order_col).asc()],
+        start=next_seq, col_name="enqueue_seq", checkpoint_dir=checkpoint_dir,
+    )
+    rows = _ckpt(
+        with_salt(accepted, salt_buckets).select(*FRONTIER_SCHEMA.fieldNames()),
+        checkpoint_dir,
+    )
+    n = rows.count()
+    seen = rows.select(
+        "url_hash", "crawlid", F.col("enqueue_seq").alias("added_seq")
+    ).unionByName(
+        flagged.filter(~F.col("_enqueue_ok")).select(
+            "url_hash", "crawlid", F.lit(None).cast("long").alias("added_seq")
+        )
+    )
+    return rows, seen, n
 
 
 def dequeue_top_k_per_host(

@@ -97,56 +97,6 @@ def first_wins_dedup(cands: DataFrame, seq_col: str = "enqueue_seq") -> DataFram
     return kept.unionByName(flagged) if has_flag else kept
 
 
-# --------------------------------------------------------------------------
-# Bloom cost gate (round 5): when does the prefilter actually win?
-#
-# Two rounds of bigseen measurements (200M seen / 1M candidates, local[32])
-# say the bloom prefilter LOSES whenever the exact anti-join can scan the
-# seen table at all:
-#     r3: exact_spj 3.12s   bloom_spj 4.61s
-#     r4: exact_spj 3.49s   bloom_spj 4.115s   (exact_shuffle 3.856s)
-# Why: any exact membership check — SPJ, shuffle, or broadcast-suspects —
-# scans the seen side once, and that scan dominates. The bloom probe can
-# only shrink the JOIN INPUT (candidate bytes entering the shuffle), which
-# at crawl-realistic candidate volumes is the cheap part; the probe itself
-# costs an extra Arrow cogroup pass over every candidate (~0.6µs/row
-# measured). Net: bloom_spj - exact_spj ≈ +18% at both operating points,
-# and the margin is flat in seen-size because both paths pay the same scan.
-#
-# The regime where the bloom DOES win is when the seen side is NOT
-# scannable at join time — a remote/cold store priced per byte, or a seen
-# set too large to keep join-materialized, where the resident ~1 bit/URL
-# bitmap (28 GiB at 10^10 URLs vs ~80 GiB+ compressed table scan) answers
-# the 99% definite-negatives without touching the table. That is a
-# DEPLOYMENT property, not a row-count crossover — so the gate keys on it
-# explicitly instead of pretending a threshold exists in (n_seen, n_cands)
-# space that the data says does not.
-# --------------------------------------------------------------------------
-
-
-def choose_unseen_path(seen_scannable: bool = True) -> str:
-    """'exact' | 'bloom' — the predicted-winner gate for the URL-seen
-    check (VERDICT r4 "What's wrong" #3). See the calibration note
-    above: exact wins at every measured operating point where the seen
-    table is scannable; the bloom path is reserved for deployments
-    where it is not."""
-    return "exact" if seen_scannable else "bloom"
-
-
-def unseen_auto(
-    cands: DataFrame,
-    seen: DataFrame,
-    blocks: DataFrame | None = None,
-    seen_scannable: bool = True,
-) -> DataFrame:
-    """Gated URL-seen filter: exact anti-join unless the gate predicts
-    the bloom prefilter wins (never-scannable seen side) AND bitmap
-    blocks are available."""
-    if choose_unseen_path(seen_scannable) == "bloom" and blocks is not None:
-        return PartitionedBloom().prefiltered_unseen(cands, seen, blocks)
-    return filter_unseen(cands, seen)
-
-
 def filter_unseen(cands: DataFrame, seen: DataFrame) -> DataFrame:
     """Exact dedup: candidates whose url_hash is NOT in the seen table.
     dont_filter rows bypass. Catalyst/AQE picks SMJ vs broadcast."""

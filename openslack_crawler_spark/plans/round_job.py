@@ -7,9 +7,9 @@ One crawl round is ONE DataFrame job committed as ONE snapshot:
    → simulated fetch → documents with interleaved spans [P5]
    → link extraction + predicates                       [P1/P2, F6-F8]
    → candidate build (depth+1, priority-10)             [W4]
-   → enqueue filters (expiry, blacklist)                [F4/F5]
    → intra-round first-wins dedup                       [F1]
    → seen anti-join (exact; bloom prefilter optional)   [J1/F3]
+   → enqueue filters (expiry, blacklist)                [F4/F5]
    → dense enqueue_seq assignment (pop-order)           [§7 step 4]
    → frontier append + seen append + counters           [S5, A1]
 
@@ -44,24 +44,13 @@ from ..operators.linkextract import (
 from ..operators.components import _ckpt
 from ..operators.seen_filter import (
     PartitionedBloom,
-    choose_unseen_path,
     filter_unseen,
     first_wins_dedup,
 )
-
-
 from ..operators.sequence import with_dense_seq
+from ..schemas import FRONTIER_SCHEMA
 from ..sources.table_format import SnapshotParquetFormat
 from ..functions.url import with_url_columns
-
-
-def _bloom_enabled(cfg) -> bool:
-    """Resolve CrawlConfig.use_bloom: explicit True/False wins; "auto"
-    asks the calibrated gate (exact beats bloom whenever the snapshot
-    store's seen table is scannable — which, here, it always is)."""
-    if cfg.use_bloom == "auto":
-        return choose_unseen_path(seen_scannable=True) == "bloom"
-    return bool(cfg.use_bloom)
 
 
 def fetch_order():
@@ -79,13 +68,11 @@ class CrawlConfig:
     k_per_host: int = 8          # per-host batch budget per round
     maxdepth: int = 2            # scraper_schema.json:22-26 caps at 3
     salt_buckets: int = 16
-    # URL-seen path: False = exact anti-join (the measured winner at
-    # every scannable operating point — seen_filter.choose_unseen_path),
-    # True = maintain + use the bloom prefilter (only for deployments
-    # whose seen side is not scannable at join time), "auto" = let the
-    # gate decide (resolves to exact here: the crawl store's seen table
-    # is always a local parquet snapshot)
-    use_bloom: bool | str = "auto"
+    # URL-seen path: False = exact anti-join (measured faster whenever
+    # the seen table is scannable, PLANS.md), True = maintain + use the
+    # bloom prefilter (for deployments whose seen side is not scannable
+    # at join time)
+    use_bloom: bool = False
     deny_extensions: list | None = None
     allowed_domains: list | None = None
     allow_regex: str | None = None
@@ -180,19 +167,14 @@ def bootstrap(
     )
     c = first_wins_dedup(c, "enqueue_seq")
     c = fr.with_salt(c, cfg.salt_buckets)
-    frontier0 = c.select(
-        "url", "url_hash", "host", "host_hash", "depth", "maxdepth", "priority",
-        "score", "appid", "crawlid", "spiderid", "retry_times", "expires",
-        "dont_filter", "enqueue_seq", "salt", "attrs",
-    )
+    frontier0 = c.select(*FRONTIER_SCHEMA.fieldNames())
     seen0 = frontier0.select(
         "url_hash", "crawlid", F.col("enqueue_seq").alias("added_seq")
     )
     next_seq = (frontier0.agg(F.max("enqueue_seq")).collect()[0][0] or 0) + 1
     updates = {"frontier": frontier0, "seen": seen0, "robots": robots}
-    if _bloom_enabled(cfg):
-        bloom = PartitionedBloom()
-        updates["bloom"] = bloom.build(seen0)
+    if cfg.use_bloom:
+        updates["bloom"] = PartitionedBloom().build(seen0)
     return fmt.commit(updates, meta={"round": 0, "next_seq": int(next_seq)})
 
 
@@ -208,6 +190,7 @@ def run_round(fmt: SnapshotParquetFormat, cfg: CrawlConfig) -> dict:
     seen = fmt.read("seen")
     robots = fmt.read("robots")
     blacklist = fmt.read("blacklist")
+    bloom = fmt.read("bloom") if cfg.use_bloom else None
 
     # 1. dequeue per-host top-k (salted two-phase rank). The popped rows
     # leave the frontier permanently — including ones the robots filter
@@ -285,47 +268,23 @@ def run_round(fmt: SnapshotParquetFormat, cfg: CrawlConfig) -> dict:
     # 6. dedup FIRST (reference order: the dupefilter is check-AND-insert
     # and runs before blacklist/expiry — scheduler.py:87-103 — so even
     # candidates later dropped by those filters enter the seen set):
-    # intra-round first-wins in pop order, then exact anti-join
-    pop_order = [
-        F.col("parent_score").desc(),
-        F.col("parent_seq").asc(),
-        F.col("anchor_offset").asc(),
-    ]
-    cands = with_dense_seq(
-        cands, pop_order, start=0, col_name="_cand_rank",
-        checkpoint_dir=cfg.checkpoint_dir,
-    )
-    cands = first_wins_dedup(cands, "_cand_rank")
-    if _bloom_enabled(cfg) and fmt.read("bloom") is not None:
-        bloom = PartitionedBloom()
-        fingerprinted = bloom.prefiltered_unseen(cands, seen, fmt.read("bloom"))
+    # intra-round first-wins in pop order, then exact anti-join. One
+    # struct key (parent score desc, parent seq, anchor offset) — compared
+    # field by field — orders both the dedup and the enqueue_seq below.
+    cands = cands.withColumn("_order", F.struct(
+        (-F.col("parent_score")).alias("neg_score"), "parent_seq", "anchor_offset",
+    ))
+    cands = first_wins_dedup(cands, "_order")
+    if bloom is not None:
+        fingerprinted = PartitionedBloom().prefiltered_unseen(cands, seen, bloom)
     else:
         fingerprinted = filter_unseen(cands, seen)
-    fingerprinted = _ckpt(fingerprinted, cfg.checkpoint_dir)
 
-    # 7. enqueue filters (blacklist, expiry) — reference order, applied
-    # AFTER fingerprinting; dropped rows stay in the seen set (marked,
-    # not filtered, so their fingerprints keep a NULL added_seq below)
-    flagged = fr.mark_enqueue_filters(fingerprinted, blacklist)
-    accepted = flagged.filter(F.col("_enqueue_ok")).drop("_enqueue_ok")
-
-    # 8. dense enqueue_seq continuing the global sequence
-    accepted = with_dense_seq(
-        accepted, [F.col("_cand_rank").asc()], start=next_seq, col_name="enqueue_seq",
-        checkpoint_dir=cfg.checkpoint_dir,
-    ).drop("_cand_rank", "parent_score", "parent_seq", "anchor_offset")
-    accepted = fr.with_salt(accepted, cfg.salt_buckets)
-    new_rows = accepted.select(*[c for c in frontier.columns])
-    new_rows = _ckpt(new_rows, cfg.checkpoint_dir)
-    n_enqueued = new_rows.count()
-    # accepted fingerprints carry their enqueue_seq into the seen table
-    # (added_seq powers fingerprint-TTL expiry / the deletable cuckoo
-    # path); blacklist/expiry-dropped fingerprints keep NULL
-    accepted_seen = new_rows.select(
-        "url_hash", "crawlid", F.col("enqueue_seq").alias("added_seq")
-    )
-    dropped_seen = flagged.filter(~F.col("_enqueue_ok")).select(
-        "url_hash", "crawlid", F.lit(None).cast("long").alias("added_seq")
+    # 7-8. enqueue filters (blacklist, expiry), dense enqueue_seq
+    # continuing the global sequence, salt
+    new_rows, new_seen, n_enqueued = fr.enqueue(
+        fingerprinted, blacklist, "_order", next_seq,
+        cfg.salt_buckets, cfg.checkpoint_dir,
     )
 
     # 8b. retry re-enqueue (ST6/W3): failed fetches with budget left go
@@ -347,7 +306,7 @@ def run_round(fmt: SnapshotParquetFormat, cfg: CrawlConfig) -> dict:
         retry_rows = _ckpt(
             retry_rows.drop("enqueue_seq")
             .withColumnRenamed("_new_seq", "enqueue_seq")
-            .select(*[c for c in frontier.columns]),
+            .select(*FRONTIER_SCHEMA.fieldNames()),
             cfg.checkpoint_dir,
         )
         n_retries = retry_rows.count()
@@ -356,9 +315,6 @@ def run_round(fmt: SnapshotParquetFormat, cfg: CrawlConfig) -> dict:
     # 9. next frontier state + seen append + counters, one atomic commit
     remaining = fr.remove_dequeued(frontier, popped)
     next_frontier = remaining.unionByName(new_rows)
-    # seen gets EVERY fingerprinted candidate (incl. blacklist/expiry
-    # drops), not just frontier appends — dupefilter.py check-and-insert
-    new_seen = accepted_seen.unionByName(dropped_seen)
     counters = _partition_counts(batch, "scheduler/dequeued", round_id).unionByName(
         _partition_counts(new_rows, "scheduler/enqueued", round_id)
     )
@@ -372,8 +328,8 @@ def run_round(fmt: SnapshotParquetFormat, cfg: CrawlConfig) -> dict:
         "fetch_log": fetch_log,
         "documents": documents,
     }
-    if _bloom_enabled(cfg) and fmt.read("bloom") is not None:
-        updates["bloom"] = PartitionedBloom().merge(fmt.read("bloom"), new_seen)
+    if bloom is not None:
+        updates["bloom"] = PartitionedBloom().merge(bloom, new_seen)
     fmt.commit(
         updates,
         appends=appends,

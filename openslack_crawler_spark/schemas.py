@@ -42,8 +42,7 @@ FRONTIER_SCHEMA = T.StructType(
 # populate it); NULL only for fingerprints whose candidate was dropped
 # by the blacklist/expiry/depth enqueue filters (they enter the seen
 # set per check-and-insert but never got a frontier row). added_seq
-# orders fingerprint-TTL expiry (queries_sessions.seen_ttl_expiry, the
-# deletable-cuckoo motivation).
+# orders fingerprint-TTL expiry (queries_sessions.seen_ttl_expiry).
 SEEN_SCHEMA = T.StructType(
     [
         T.StructField("url_hash", T.LongType(), False),

@@ -127,14 +127,19 @@ class SnapshotParquetFormat:
                 )
             tables.setdefault(name, [])
             tables[name] = tables[name] + [_write(name, df)]
+        return self._publish(parent["snapshot_id"], tables, meta)
+
+    def _publish(self, parent_sid: int, tables: dict, meta: dict | None) -> int:
+        """Write the next snapshot's manifest, then atomically point
+        CURRENT at it. Every commit path ends here."""
+        sid = parent_sid + 1
         manifest = {
             "snapshot_id": sid,
-            "parent": parent["snapshot_id"],
+            "parent": parent_sid,
             "tables": tables,
             "meta": meta or {},
         }
-        mpath = os.path.join(self.root, "manifests", f"{sid}.json")
-        with open(mpath, "w") as f:
+        with open(os.path.join(self.root, "manifests", f"{sid}.json"), "w") as f:
             json.dump(manifest, f)
         tmp = os.path.join(self.root, f".CURRENT.{uuid.uuid4().hex[:8]}")
         with open(tmp, "w") as f:
@@ -199,19 +204,7 @@ class SnapshotParquetFormat:
                 buckets[d.name.split("=", 1)[1]] = d.path
         tables = {k: v for k, v in parent["tables"].items()}
         tables[table] = {"key": key, "num_buckets": num_buckets, "buckets": buckets}
-        manifest = {
-            "snapshot_id": sid,
-            "parent": parent["snapshot_id"],
-            "tables": tables,
-            "meta": meta or {},
-        }
-        with open(os.path.join(self.root, "manifests", f"{sid}.json"), "w") as f:
-            json.dump(manifest, f)
-        tmp = os.path.join(self.root, f".CURRENT.{uuid.uuid4().hex[:8]}")
-        with open(tmp, "w") as f:
-            f.write(str(sid))
-        os.replace(tmp, os.path.join(self.root, "CURRENT"))
-        return sid
+        return self._publish(parent["snapshot_id"], tables, meta)
 
     def merge_upsert_bucketed(
         self, table: str, df: DataFrame, key: str, num_buckets: int = 64

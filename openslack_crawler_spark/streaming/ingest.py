@@ -54,48 +54,35 @@ def parse_requests(raw: DataFrame, value_col: str = "value") -> DataFrame:
 
 def enqueue_batch(fmt: SnapshotParquetFormat, batch: DataFrame, epoch_id: int) -> None:
     """foreachBatch sink: one micro-batch → one snapshot commit through
-    the standard enqueue operators."""
+    the same enqueue pipeline as a crawl round (dupe → blacklist →
+    expiry → push, scheduler.py:87-103)."""
     meta = fmt.meta() or {"round": 0, "next_seq": 0}
     next_seq = int(meta.get("next_seq", 0))
+    # the row's place in the micro-batch (kafka offsets would supply this
+    # on a real topic): breaks (appid, url) ties between raw URLs that
+    # canonicalize alike, so the first to arrive wins
+    batch = batch.withColumn("_arrival", F.monotonically_increasing_id())
     cands = with_url_columns(batch, "url", canonicalize=True)
+    # one order key picks the first-wins duplicate and orders the
+    # enqueue_seq, which fr.enqueue assigns only AFTER dedup + seen
+    # anti-join, so next_seq advances by exactly the kept count and seqs
+    # stay dense across micro-batches
     cands = (
         cands.withColumn("depth", F.lit(0))
         .withColumn("retry_times", F.lit(0))
         .withColumn("dont_filter", F.lit(False))
         .withColumn("score", fr.score_expr())
+        .withColumn("_order", F.struct("appid", "url", "_arrival"))
+        .drop("_arrival")
     )
-    # deterministic intra-batch arrival order by (appid, url) — kafka
-    # offsets would supply this on a real topic. The final enqueue_seq is
-    # assigned only AFTER dedup + seen anti-join (as round_job step 8
-    # does): assigning it first and advancing next_seq by the kept count
-    # would let kept rows hold seqs >= the new next_seq, so a later
-    # micro-batch would reuse them and break the dense/monotone seq
-    # contract the pop tiebreak relies on.
-    from ..operators.sequence import with_dense_seq
-
-    cands = with_dense_seq(
-        cands, [F.col("appid").asc(), F.col("url").asc()], start=0,
-        col_name="_arrival_rank",
-    )
-    cands = first_wins_dedup(cands, "_arrival_rank")
+    cands = first_wins_dedup(cands, "_order")
     seen = fmt.read("seen")
     if seen is not None:
         cands = filter_unseen(cands, seen)
-    cands = with_dense_seq(
-        cands, [F.col("_arrival_rank").asc()], start=next_seq,
-        col_name="enqueue_seq",
-    ).drop("_arrival_rank")
-    cands = fr.with_salt(cands)
-    frontier = fmt.read("frontier")
-    new_rows = cands.select(
-        "url", "url_hash", "host", "host_hash", "depth", "maxdepth", "priority",
-        "score", "appid", "crawlid", "spiderid", "retry_times", "expires",
-        "dont_filter", "enqueue_seq", "salt", "attrs",
-    ).localCheckpoint()
-    n_new = new_rows.count()
-    new_seen = new_rows.select(
-        "url_hash", "crawlid", F.col("enqueue_seq").alias("added_seq")
+    new_rows, new_seen, n_new = fr.enqueue(
+        cands, fmt.read("blacklist"), "_order", next_seq
     )
+    frontier = fmt.read("frontier")
     fmt.commit(
         updates={
             "frontier": new_rows if frontier is None else frontier.unionByName(new_rows)

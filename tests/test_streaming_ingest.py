@@ -2,9 +2,17 @@
 → atomic micro-batch enqueue; redelivery is idempotent."""
 
 import json
+import uuid
 
+from openslack_crawler_spark import synthetic
+from openslack_crawler_spark.functions.url import with_url_columns
+from openslack_crawler_spark.plans import monitor, round_job as rj
 from openslack_crawler_spark.sources.table_format import SnapshotParquetFormat
-from openslack_crawler_spark.streaming.ingest import start_file_ingest
+from openslack_crawler_spark.streaming.ingest import (
+    enqueue_batch,
+    parse_requests,
+    start_file_ingest,
+)
 
 
 def _write_requests(d, rows, name):
@@ -108,3 +116,76 @@ def test_ingest_seq_dense_and_unique_across_batches(spark, tmp_path):
     # seen rows carry the enqueue_seq they entered with (added_seq)
     added = {r.added_seq for r in fmt.read("seen").collect()}
     assert added == {0, 1, 2, 3}
+
+
+def _requests(spark, rows):
+    return parse_requests(
+        spark.createDataFrame([(json.dumps(r),) for r in rows], "value string")
+    )
+
+
+def test_ingest_applies_blacklist_and_expiry(spark, tmp_path):
+    """Streamed requests go through the same enqueue filters as crawl
+    candidates (scheduler.py:87-103): a request for a stopped crawl, or
+    one whose `expires` has passed, never reaches the frontier, but its
+    fingerprint enters the seen set with a NULL added_seq."""
+    fmt = SnapshotParquetFormat(str(tmp_path / "store"), spark)
+    enqueue_batch(
+        fmt, _requests(spark, [
+            {"url": "http://h0.example/1", "appid": "app", "crawlid": "stopped"},
+        ]), 0,
+    )
+    monitor.stop_crawl(fmt, "app", "stopped")
+    stopped = {"url": "http://h0.example/2", "appid": "app", "crawlid": "stopped"}
+    expired = {"url": "http://h0.example/3", "appid": "app", "crawlid": "live",
+               "expires": 946684800}  # 2000-01-01
+    kept = {"url": "http://h0.example/4", "appid": "app", "crawlid": "live"}
+    enqueue_batch(fmt, _requests(spark, [stopped, expired, kept]), 1)
+
+    assert [r.url for r in fmt.read("frontier").collect()] == [kept["url"]]
+    assert fmt.meta()["next_seq"] == 2
+    hashes = {
+        r.url: r.url_hash
+        for r in with_url_columns(
+            spark.createDataFrame([(stopped["url"],), (expired["url"],)], "url string")
+        ).collect()
+    }
+    seen = {r.url_hash: r.added_seq for r in fmt.read("seen").collect()}
+    assert {h: seen.get(h, "missing") for h in hashes.values()} == {
+        h: None for h in hashes.values()
+    }
+
+
+def _jobs(spark, fn) -> int:
+    """Spark jobs that fn() runs (its own job group)."""
+    sc = spark.sparkContext
+    group = f"job-budget-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_enqueue_job_budget(spark, tmp_path):
+    """The crawl round and the streaming micro-batch share one enqueue
+    path whose dense enqueue_seq is the only rank pass. With a second,
+    tiebreak-only rank pass before first-wins dedup this round ran 45
+    Spark jobs and this micro-batch 27."""
+    seeds = synthetic.gen_seeds(spark, 200, n_hosts=15)
+    robots = synthetic.gen_robots(spark, 15)
+    cfg = rj.CrawlConfig(n_hosts=15, k_per_host=4, maxdepth=2)
+    crawl = SnapshotParquetFormat(str(tmp_path / "crawl"), spark)
+    rj.bootstrap(crawl, seeds, robots, cfg)
+    round_jobs = _jobs(spark, lambda: rj.run_round(crawl, cfg))
+
+    store = SnapshotParquetFormat(str(tmp_path / "ingest"), spark)
+    rj.bootstrap(store, seeds, robots, cfg)
+    reqs = _requests(spark, [
+        {"url": f"http://h{i % 5}.example/{i}", "appid": "app-1", "crawlid": "crawl-1"}
+        for i in range(50)
+    ])
+    batch_jobs = _jobs(spark, lambda: enqueue_batch(store, reqs, 1))
+    assert round_jobs < 45, round_jobs
+    assert batch_jobs < 27, batch_jobs
