@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 
 from ..schemas import FRONTIER_SCHEMA
 from . import sequence
-from .components import _ckpt
+from .components import ckpt_auto
 
 DEPTH_DECAY = 10  # link_spider.py:81
 RETRY_DECAY = 10  # redis_retry.py:20
@@ -125,7 +125,6 @@ def enqueue(
     order_col: str,
     next_seq: int,
     salt_buckets: int = DEFAULT_SALT_BUCKETS,
-    checkpoint_dir: str | None = None,
 ) -> tuple[DataFrame, DataFrame, int]:
     """The push half of the enqueue pipeline (scheduler.py:87-103), run
     on rows that already passed first-wins dedup and the seen check:
@@ -134,16 +133,15 @@ def enqueue(
     The seen rows are every input row: accepted ones carry their
     enqueue_seq as added_seq, filtered-out ones NULL (the dupefilter is
     check-and-insert, so they stay fingerprinted)."""
-    flagged = _ckpt(mark_enqueue_filters(cands, blacklist), checkpoint_dir)
-    accepted = sequence.with_dense_seq(
+    # the cut pins ONE current_timestamp() evaluation: the accepted and
+    # the filtered-out rows are read by separate writes, and must come
+    # from the same expiry decision
+    flagged = ckpt_auto(mark_enqueue_filters(cands, blacklist))
+    accepted, n = sequence.with_dense_seq(
         flagged.filter(F.col("_enqueue_ok")), [F.col(order_col).asc()],
-        start=next_seq, col_name="enqueue_seq", checkpoint_dir=checkpoint_dir,
+        start=next_seq, col_name="enqueue_seq",
     )
-    rows = _ckpt(
-        with_salt(accepted, salt_buckets).select(*FRONTIER_SCHEMA.fieldNames()),
-        checkpoint_dir,
-    )
-    n = rows.count()
+    rows = with_salt(accepted, salt_buckets).select(*FRONTIER_SCHEMA.fieldNames())
     seen = rows.select(
         "url_hash", "crawlid", F.col("enqueue_seq").alias("added_seq")
     ).unionByName(

@@ -3,20 +3,30 @@
 The frontier needs a monotone, deterministic `enqueue_seq` (the
 rebuild's documented tiebreak for Redis zset pop order — SURVEY.md §7
 step 4). A naive global `row_number()` is a single-partition sort; this
-helper is the scalable two-phase form:
+helper is one distributed sort plus a narrow projection:
 
-1. range-partition + local sort by the order columns (balanced),
-2. local row_number per physical partition,
-3. add the exclusive prefix-sum of per-partition counts (a tiny
-   driver-side table, broadcast back).
+1. global sort by the order columns, tagged with
+   `monotonically_increasing_id()` and cut eagerly: partition p holds
+   the p-th key range in order (AQE coalescing only merges adjacent
+   ranges), so `_id >> 33` is the partition and `_id & (2^33-1)` the
+   row's place inside it,
+2. one aggregate collects the per-partition counts (O(P) driver data),
+3. seq = start + offset[partition] + place, with the exclusive prefix
+   sums as a literal map.
 
-Same result as a global row_number, no single-reducer stage.
+Same result as a global row_number, no single-reducer stage, and the
+result is a pure projection over the cut: every consumer recomputes
+identical values without another cut.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .components import ckpt_auto
+
+_PLACE_BITS = 33  # monotonically_increasing_id: partition << 33 | place
 
 
 def with_dense_seq(
@@ -24,42 +34,25 @@ def with_dense_seq(
     order_cols: list,
     start: int = 0,
     col_name: str = "seq",
-    num_partitions: int | None = None,
-    checkpoint_dir: str | None = None,
-) -> DataFrame:
+) -> tuple[DataFrame, int]:
     """Assign col_name = start + (0-based global rank by order_cols).
-    checkpoint_dir switches the mandatory lineage cut to a reliable
-    checkpoint (cluster path: survives executor loss)."""
-    n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    ranged = df.repartitionByRange(n, *order_cols).withColumn(
-        "_pid", F.spark_partition_id()
+    Returns (rows, row count)."""
+    # EAGER cut: the sort's range boundaries come from sampling, so the
+    # counts pass and every later read MUST observe the same
+    # materialization (a recompute could draw different boundaries →
+    # duplicate/missing seqs)
+    ranked = ckpt_auto(
+        df.orderBy(*order_cols).withColumn("_id", F.monotonically_increasing_id())
     )
-    # EAGER checkpoint: range-partition boundaries come from sampling,
-    # so the counts pass and the rank pass MUST observe the same
-    # materialization (a lazily-cached plan could recompute with
-    # different boundaries after eviction → duplicate/missing seqs)
-    from .components import _ckpt, session_checkpoint_dir  # noqa: PLC0415
-
-    ranged = _ckpt(
-        ranged,
-        checkpoint_dir or session_checkpoint_dir(df.sparkSession),
-    )
-    counts = (
-        ranged.groupBy("_pid").count().orderBy("_pid").collect()
-    )
-    offsets, acc = {}, start
-    for row in counts:
-        offsets[row["_pid"]] = acc
-        acc += row["count"]
-    off_df = F.broadcast(
-        df.sparkSession.createDataFrame(
-            [(int(p), int(o)) for p, o in offsets.items()], "_pid int, _off long"
-        )
-    )
-    w = Window.partitionBy("_pid").orderBy(*order_cols)
+    part = F.shiftright("_id", _PLACE_BITS).cast("int")
+    counts = sorted(tuple(r) for r in ranked.groupBy(part.alias("p")).count().collect())
+    offsets, total = [], start
+    for p, n in counts:
+        offsets += [F.lit(p), F.lit(total).cast("long")]
+        total += n
+    offset = F.element_at(F.create_map(*offsets), part) if offsets else F.lit(start)
+    place = F.col("_id").bitwiseAND(F.lit((1 << _PLACE_BITS) - 1))
     return (
-        ranged.withColumn("_lrn", F.row_number().over(w))
-        .join(off_df, "_pid")
-        .withColumn(col_name, (F.col("_off") + F.col("_lrn") - 1).cast("long"))
-        .drop("_pid", "_lrn", "_off")
+        ranked.withColumn(col_name, (offset + place).cast("long")).drop("_id"),
+        total - start,
     )

@@ -121,7 +121,7 @@ class CrawlOracle:
                 return False
             import re
 
-            p = int(re.search(r"/(\d+)$", r.url).group(1))
+            p = int(re.search(r"/(\d+)(?:\?|$)", r.url).group(1))
             return (p + r.retry_times * 7919) % self.failure_mod == 3
 
         failed = [r for r, _ in fetched if fails(r)]

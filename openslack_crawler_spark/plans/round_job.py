@@ -41,7 +41,7 @@ from ..operators.linkextract import (
     first_per_page,
     links_to_candidates,
 )
-from ..operators.components import _ckpt
+from ..operators.components import ckpt_auto
 from ..operators.seen_filter import (
     PartitionedBloom,
     filter_unseen,
@@ -83,10 +83,6 @@ class CrawlConfig:
     # (redis_retry.py:9-22) until retry_max (RETRY_TIMES settings.py:166)
     failure_mod: int = 0
     retry_max: int = 3
-    # reliable checkpoint dir for mid-round lineage cuts (cluster path:
-    # localCheckpoint blocks die with their executor; an HDFS/S3 dir
-    # here makes every cut survive executor loss). None = in-memory.
-    checkpoint_dir: str | None = None
     # snapshot retention: expire snapshots (keep this many) on the same
     # 16-round maintenance cadence as compaction; None = keep all
     # (storage then grows O(history) — set this for long crawls)
@@ -197,11 +193,11 @@ def run_round(fmt: SnapshotParquetFormat, cfg: CrawlConfig) -> dict:
     # then discards (a robots-dropped request is consumed, not requeued:
     # scrapy RobotsTxtMiddleware semantics, settings.py:138)
     popped = fr.dequeue_top_k_per_host(frontier, cfg.k_per_host, salted=True)
-    popped = _ckpt(popped, cfg.checkpoint_dir)
+    popped = ckpt_auto(popped)
     # 2. robots + politeness virtual-clock slots
     batch = po.robots_filter(popped, robots)
     batch = po.assign_fetch_slots(batch, robots, round_start=F.lit(0.0))
-    batch = _ckpt(batch, cfg.checkpoint_dir)  # cut lineage; batch reused 4×
+    batch = ckpt_auto(batch)  # cut lineage; batch reused 4×
 
     n_fetched = batch.count()
     if n_fetched == 0:
@@ -283,8 +279,7 @@ def run_round(fmt: SnapshotParquetFormat, cfg: CrawlConfig) -> dict:
     # 7-8. enqueue filters (blacklist, expiry), dense enqueue_seq
     # continuing the global sequence, salt
     new_rows, new_seen, n_enqueued = fr.enqueue(
-        fingerprinted, blacklist, "_order", next_seq,
-        cfg.salt_buckets, cfg.checkpoint_dir,
+        fingerprinted, blacklist, "_order", next_seq, cfg.salt_buckets
     )
 
     # 8b. retry re-enqueue (ST6/W3): failed fetches with budget left go
@@ -296,20 +291,17 @@ def run_round(fmt: SnapshotParquetFormat, cfg: CrawlConfig) -> dict:
         retry_rows = fr.decay_for_retry(
             failed.filter(F.col("retry_times") < cfg.retry_max)
         )
-        retry_rows = with_dense_seq(
+        retry_rows, n_retries = with_dense_seq(
             retry_rows,
             [F.col("score").desc(), F.col("enqueue_seq").asc()],
             start=next_seq + n_enqueued,
             col_name="_new_seq",
-            checkpoint_dir=cfg.checkpoint_dir,
         )
-        retry_rows = _ckpt(
+        retry_rows = (
             retry_rows.drop("enqueue_seq")
             .withColumnRenamed("_new_seq", "enqueue_seq")
-            .select(*FRONTIER_SCHEMA.fieldNames()),
-            cfg.checkpoint_dir,
+            .select(*FRONTIER_SCHEMA.fieldNames())
         )
-        n_retries = retry_rows.count()
         new_rows = new_rows.unionByName(retry_rows)
 
     # 9. next frontier state + seen append + counters, one atomic commit

@@ -151,7 +151,7 @@ def outlink_exprs(page_id, host_id, n_hosts: int):
 
 def page_id_of(url_col):
     """Inverse of the URL scheme above: numeric page id from path tail."""
-    return F.regexp_extract(url_col, r"/(\d+)$", 1).cast("long")
+    return F.regexp_extract(url_col, r"/(\d+)(?:\?|$)", 1).cast("long")
 
 
 def host_id_of(url_col):
@@ -162,7 +162,7 @@ def host_id_of(url_col):
 def py_outlinks(url: str, n_hosts: int) -> list[str]:
     import re
 
-    p = int(re.search(r"/(\d+)$", url).group(1))
+    p = int(re.search(r"/(\d+)(?:\?|$)", url).group(1))
     h = int(re.search(r"host-(\d+)\.example", url).group(1))
     n_out = (p * 2654435761 + 97) % (N_OUTLINKS_MAX + 1)
     out = []
@@ -179,7 +179,7 @@ def py_spans(url: str, n_hosts: int) -> list[tuple[str, str, str, int]]:
     text+media invariant target (input_hint: span-sequence equality)."""
     import re
 
-    p = int(re.search(r"/(\d+)$", url).group(1))
+    p = int(re.search(r"/(\d+)(?:\?|$)", url).group(1))
     spans = [("text", f"page {p} text", "", 0)]
     for off, link in enumerate(py_outlinks(url, n_hosts), start=1):
         spans.append(("link", link, "", off))

@@ -85,11 +85,30 @@ def test_dense_seq_matches_global_rank(spark):
     df = spark.range(500).select(
         F.col("id"), F.pmod(F.xxhash64("id"), F.lit(1000)).alias("k")
     )
-    got = with_dense_seq(df, [F.col("k").asc(), F.col("id").asc()], start=7, col_name="s")
-    rows = got.orderBy("s").collect()
-    assert [r.s for r in rows] == list(range(7, 507))
-    resorted = sorted(rows, key=lambda r: (r.k, r.id))
-    assert [r.s for r in resorted] == list(range(7, 507))
+    order = [F.col("k").asc(), F.col("id").asc()]
+    # AQE coalesces this small input to one partition; without
+    # coalescing the per-partition offsets are exercised too
+    conf = "spark.sql.adaptive.coalescePartitions.enabled"
+    prev = spark.conf.get(conf)
+    for coalesce in ("true", "false"):
+        spark.conf.set(conf, coalesce)
+        try:
+            got, n = with_dense_seq(df, order, start=7, col_name="s")
+        finally:
+            spark.conf.set(conf, prev)
+        assert n == 500
+        if coalesce == "false":
+            assert got.rdd.getNumPartitions() > 1
+        rows = got.orderBy("s").collect()
+        assert [r.s for r in rows] == list(range(7, 507))
+        resorted = sorted(rows, key=lambda r: (r.k, r.id))
+        assert [r.s for r in resorted] == list(range(7, 507))
+    # a narrow projection over the cut: every consumer (frontier write,
+    # seen write) recomputes the same seqs without another cut
+    plan = got._jdf.queryExecution().executedPlan().toString()
+    assert not any(op in plan for op in ("Exchange", "Window", "Join")), plan
+    empty, n = with_dense_seq(df.limit(0), order, start=7, col_name="s")
+    assert n == 0 and empty.count() == 0
 
 
 def test_mark_enqueue_filters_null_flag_coalesced(spark):

@@ -3,8 +3,6 @@ reference-semantics oracle exactly — crawl ordering, URL-seen set, and
 per-document span sequences (BASELINE.json north_rule + input_hint) —
 on the same seed list, same politeness budget, same page graph."""
 
-import shutil
-
 import pytest
 
 from openslack_crawler_spark import synthetic
@@ -18,19 +16,15 @@ K = 5
 MAXDEPTH = 2
 
 
-@pytest.fixture(scope="module")
-def spark_run(spark, tmp_path_factory):
-    root = str(tmp_path_factory.mktemp("crawlrun"))
-    shutil.rmtree(root, ignore_errors=True)
-    seeds = synthetic.gen_seeds(spark, N_SEEDS, n_hosts=N_HOSTS)
+def _spark_run(spark, root, messy_frac):
+    seeds = synthetic.gen_seeds(spark, N_SEEDS, n_hosts=N_HOSTS, messy_frac=messy_frac)
     robots = synthetic.gen_robots(spark, N_HOSTS)
     cfg = rj.CrawlConfig(n_hosts=N_HOSTS, k_per_host=K, maxdepth=MAXDEPTH)
     fmt = rj.run_crawl(spark, root, seeds, robots, cfg, rounds=ROUNDS)
     return fmt, seeds, robots
 
 
-@pytest.fixture(scope="module")
-def oracle_run(spark_run, spark):
+def _oracle_run(spark_run):
     _, seeds, robots = spark_run
     seed_rows = [
         (r.url, r.priority, r.enqueue_seq) for r in seeds.collect()
@@ -46,6 +40,16 @@ def oracle_run(spark_run, spark):
     o = CrawlOracle(robot_rows, n_hosts=N_HOSTS, k_per_host=K, maxdepth=MAXDEPTH)
     o.bootstrap(seed_rows)
     return o.run(ROUNDS)
+
+
+@pytest.fixture(scope="module")
+def spark_run(spark, tmp_path_factory):
+    return _spark_run(spark, str(tmp_path_factory.mktemp("crawlrun")), 0.0)
+
+
+@pytest.fixture(scope="module")
+def oracle_run(spark_run):
+    return _oracle_run(spark_run)
 
 
 def test_crawl_ordering_parity(spark_run, oracle_run):
@@ -101,3 +105,14 @@ def test_frontier_state_parity(spark_run, oracle_run):
         (r.url, r.depth, r.priority) for r in oracle_run.frontier
     }
     assert spark_frontier == oracle_frontier
+
+
+def test_messy_seed_parity(spark, tmp_path):
+    """Non-canonical seeds (uppercase scheme/host, default port, query,
+    fragment) canonicalize to URLs with a query string: the page id
+    still parses, and all four parity artifacts match the oracle."""
+    run = _spark_run(spark, str(tmp_path), 0.3)
+    oracle = _oracle_run(run)
+    for check in (test_crawl_ordering_parity, test_url_seen_set_parity,
+                  test_span_sequence_parity, test_frontier_state_parity):
+        check(run, oracle)

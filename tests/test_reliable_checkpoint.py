@@ -8,6 +8,9 @@ from pyspark.sql import functions as F
 from openslack_crawler_spark import synthetic
 from openslack_crawler_spark.operators.components import connected_components
 from openslack_crawler_spark.plans import round_job as rj
+from openslack_crawler_spark.sources.table_format import SnapshotParquetFormat
+
+SEAM = "spark.graft.checkpointDir"
 
 
 def test_components_with_reliable_checkpoint(spark, tmp_path):
@@ -37,19 +40,41 @@ def test_components_with_reliable_checkpoint(spark, tmp_path):
 def test_crawl_rounds_with_reliable_checkpoint(spark, tmp_path):
     seeds = synthetic.gen_seeds(spark, 300, n_hosts=20)
     robots = synthetic.gen_robots(spark, 20)
-    base_cfg = rj.CrawlConfig(n_hosts=20, k_per_host=4, maxdepth=2)
-    ck_cfg = rj.CrawlConfig(
-        n_hosts=20, k_per_host=4, maxdepth=2,
-        checkpoint_dir=str(tmp_path / "ckpt"),
-    )
-    fmt_a = rj.run_crawl(spark, str(tmp_path / "a"), seeds, robots, base_cfg, rounds=2)
-    fmt_b = rj.run_crawl(spark, str(tmp_path / "b"), seeds, robots, ck_cfg, rounds=2)
+    cfg = rj.CrawlConfig(n_hosts=20, k_per_host=4, maxdepth=2)
+    fmt_a = rj.run_crawl(spark, str(tmp_path / "a"), seeds, robots, cfg, rounds=2)
+    spark.conf.set(SEAM, str(tmp_path / "ckpt"))
+    try:
+        fmt_b = rj.run_crawl(spark, str(tmp_path / "b"), seeds, robots, cfg, rounds=2)
+        order_b = [tuple(r) for r in rj.crawl_order(fmt_b).collect()]
+    finally:
+        spark.conf.unset(SEAM)
     order_a = [tuple(r) for r in rj.crawl_order(fmt_a).collect()]
-    order_b = [tuple(r) for r in rj.crawl_order(fmt_b).collect()]
     assert order_a == order_b
     seen_a = {r.url_hash for r in fmt_a.read("seen").collect()}
     seen_b = {r.url_hash for r in fmt_b.read("seen").collect()}
     assert seen_a == seen_b
+
+
+def test_checkpoint_seam_covers_every_round_cut(spark, tmp_path, monkeypatch):
+    """The session seam alone routes every lineage cut of bootstrap and
+    a crawl round (retries included) through reliable checkpoints: the
+    round completes with localCheckpoint unavailable."""
+    seeds = synthetic.gen_seeds(spark, 300, n_hosts=20)
+    robots = synthetic.gen_robots(spark, 20)
+    cfg = rj.CrawlConfig(n_hosts=20, k_per_host=4, maxdepth=2, failure_mod=5)
+
+    def no_local_checkpoint(self, *args, **kwargs):
+        raise AssertionError("localCheckpoint under the reliable-checkpoint seam")
+
+    monkeypatch.setattr(type(seeds), "localCheckpoint", no_local_checkpoint)
+    spark.conf.set(SEAM, str(tmp_path / "ckpt"))
+    try:
+        fmt = SnapshotParquetFormat(str(tmp_path / "crawl"), spark)
+        rj.bootstrap(fmt, seeds, robots, cfg)
+        stats = rj.run_round(fmt, cfg)
+    finally:
+        spark.conf.unset(SEAM)
+    assert stats["fetched"] > 0 and stats["enqueued"] > 0 and stats["retried"] > 0
 
 
 def test_path_halving_chain_converges_logarithmically(spark):

@@ -170,9 +170,12 @@ def _jobs(spark, fn) -> int:
 
 def test_enqueue_job_budget(spark, tmp_path):
     """The crawl round and the streaming micro-batch share one enqueue
-    path whose dense enqueue_seq is the only rank pass. With a second,
-    tiebreak-only rank pass before first-wins dedup this round ran 45
-    Spark jobs and this micro-batch 27."""
+    path whose dense enqueue_seq is the only rank pass: one sort, cut
+    once, plus one per-partition count, read back as a narrow
+    projection. With a second, tiebreak-only rank pass before
+    first-wins dedup this round ran 45 Spark jobs and this micro-batch
+    27; with a window + broadcast-join dense seq that enqueue cut again
+    and counted it ran 36 and 19."""
     seeds = synthetic.gen_seeds(spark, 200, n_hosts=15)
     robots = synthetic.gen_robots(spark, 15)
     cfg = rj.CrawlConfig(n_hosts=15, k_per_host=4, maxdepth=2)
@@ -187,5 +190,5 @@ def test_enqueue_job_budget(spark, tmp_path):
         for i in range(50)
     ])
     batch_jobs = _jobs(spark, lambda: enqueue_batch(store, reqs, 1))
-    assert round_jobs < 45, round_jobs
-    assert batch_jobs < 27, batch_jobs
+    assert round_jobs <= 29, round_jobs
+    assert batch_jobs <= 12, batch_jobs
