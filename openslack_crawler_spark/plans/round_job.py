@@ -163,7 +163,9 @@ def bootstrap(
     )
     c = first_wins_dedup(c, "enqueue_seq")
     c = fr.with_salt(c, cfg.salt_buckets)
-    frontier0 = c.select(*FRONTIER_SCHEMA.fieldNames())
+    # one cut: the next_seq aggregate and the frontier and seen writes
+    # all read it, instead of each re-running canonicalize + dedup
+    frontier0 = ckpt_auto(c.select(*FRONTIER_SCHEMA.fieldNames()))
     seen0 = frontier0.select(
         "url_hash", "crawlid", F.col("enqueue_seq").alias("added_seq")
     )

@@ -29,8 +29,10 @@ import json
 import os
 import shutil
 import uuid
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.util import inheritable_thread_target
 
 
 class SnapshotParquetFormat:
@@ -97,7 +99,14 @@ class SnapshotParquetFormat:
         contents (one fresh data dir); `appends` add a delta data dir to
         the table's existing file list — O(delta) work per round, the
         Iceberg append shape (a 10^10-row seen table must never be
-        rewritten per round). Unchanged tables carry over."""
+        rewritten per round). Unchanged tables carry over.
+
+        Every table name is checked before any write starts. The
+        commit's writes are independent, so they run at once, one thread
+        per table; each thread inherits the caller's job group, local
+        properties and tags. CURRENT advances only after every write
+        succeeded: a failed write is re-raised once the others finished,
+        and nothing is published."""
         parent = self.current_manifest() or {"tables": {}, "snapshot_id": -1}
         sid = parent["snapshot_id"] + 1
         # Carry bucketed entries (dicts) through unchanged — wrapping one in a
@@ -106,27 +115,28 @@ class SnapshotParquetFormat:
             k: (v if isinstance(v, (list, dict)) else [v])
             for k, v in parent["tables"].items()
         }
+        writes = [(n, df, False) for n, df in (updates or {}).items()]
+        writes += [(n, df, True) for n, df in (appends or {}).items()]
+        for name, _, _ in writes:
+            if isinstance(tables.get(name), dict):
+                raise ValueError(
+                    f"table {name!r} has a bucketed layout; route writes through "
+                    "merge_upsert_bucketed (or compact) instead of commit/append"
+                )
 
         def _write(name: str, df: DataFrame) -> str:
             path = os.path.join(self.root, "data", name, f"{sid}-{uuid.uuid4().hex[:8]}")
             df.write.mode("overwrite").parquet(path)
             return path
 
-        for name, df in (updates or {}).items():
-            if isinstance(tables.get(name), dict):
-                raise ValueError(
-                    f"table {name!r} has a bucketed layout; route writes through "
-                    "merge_upsert_bucketed (or compact) instead of commit/append"
-                )
-            tables[name] = [_write(name, df)]
-        for name, df in (appends or {}).items():
-            if isinstance(tables.get(name), dict):
-                raise ValueError(
-                    f"table {name!r} has a bucketed layout; route writes through "
-                    "merge_upsert_bucketed (or compact) instead of commit/append"
-                )
-            tables.setdefault(name, [])
-            tables[name] = tables[name] + [_write(name, df)]
+        with ThreadPoolExecutor(max_workers=max(1, len(writes))) as pool:
+            futures = [
+                pool.submit(inheritable_thread_target(self.spark)(_write), name, df)
+                for name, df, _ in writes
+            ]
+        for (name, _, append), fut in zip(writes, futures):
+            path = fut.result()
+            tables[name] = (tables.get(name, []) if append else []) + [path]
         return self._publish(parent["snapshot_id"], tables, meta)
 
     def _publish(self, parent_sid: int, tables: dict, meta: dict | None) -> int:

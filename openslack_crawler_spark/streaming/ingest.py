@@ -55,7 +55,13 @@ def parse_requests(raw: DataFrame, value_col: str = "value") -> DataFrame:
 def enqueue_batch(fmt: SnapshotParquetFormat, batch: DataFrame, epoch_id: int) -> None:
     """foreachBatch sink: one micro-batch → one snapshot commit through
     the same enqueue pipeline as a crawl round (dupe → blacklist →
-    expiry → push, scheduler.py:87-103)."""
+    expiry → push, scheduler.py:87-103).
+
+    The batch's new frontier rows are appended as one delta data dir,
+    like its seen rows: the frontier is never read or rewritten here,
+    so a micro-batch writes O(batch), not O(frontier) — the zadd per
+    accepted request of scheduler.py:87-103. The next crawl round
+    replaces the frontier and so folds the deltas back into one dir."""
     meta = fmt.meta() or {"round": 0, "next_seq": 0}
     next_seq = int(meta.get("next_seq", 0))
     # the row's place in the micro-batch (kafka offsets would supply this
@@ -82,12 +88,8 @@ def enqueue_batch(fmt: SnapshotParquetFormat, batch: DataFrame, epoch_id: int) -
     new_rows, new_seen, n_new = fr.enqueue(
         cands, fmt.read("blacklist"), "_order", next_seq
     )
-    frontier = fmt.read("frontier")
     fmt.commit(
-        updates={
-            "frontier": new_rows if frontier is None else frontier.unionByName(new_rows)
-        },
-        appends={"seen": new_seen},
+        appends={"frontier": new_rows, "seen": new_seen},
         meta={"round": int(meta.get("round", 0)), "next_seq": next_seq + n_new,
               "epoch": int(epoch_id)},
     )

@@ -244,6 +244,69 @@ def test_bucketed_table_survives_plain_commits(spark, tmp_path):
     assert fmt.read("docs").count() == 1010
 
 
+def test_failed_commit_publishes_nothing(spark, tmp_path):
+    """A commit's table writes run at once; when one of them fails at
+    execution the commit raises only after the others finished, CURRENT
+    stays where it was, no write job outlives the call, and the manifest
+    never references the good table's new data dir."""
+    import glob
+
+    import pytest
+
+    from openslack_crawler_spark.sources.table_format import SnapshotParquetFormat
+
+    fmt = SnapshotParquetFormat(str(tmp_path / "store"), spark)
+    good = spark.range(1000).select(F.col("id").alias("k"))
+    sid = fmt.commit({"good": good})
+    before = fmt.current_manifest()
+    bad = spark.range(10).select(
+        F.col("id").alias("k"),
+        F.when(F.col("id") >= 0, F.raise_error(F.lit("boom"))).cast("string").alias("x"),
+    )
+    with pytest.raises(Exception, match="boom"):
+        fmt.commit({"good": good.filter("k < 500")}, appends={"bad": bad})
+    assert spark.sparkContext.statusTracker().getActiveJobsIds() == []
+    assert fmt.current_snapshot_id() == sid
+    assert fmt.current_manifest() == before
+    new_dirs = set(glob.glob(str(tmp_path / "store" / "data" / "good" / "*"))) - set(
+        before["tables"]["good"]
+    )
+    manifests = "".join(
+        open(m).read() for m in glob.glob(str(tmp_path / "store" / "manifests" / "*"))
+    )
+    assert not any(d in manifests for d in new_dirs)
+    assert fmt.read("good").count() == 1000
+
+    # a commit naming a bucketed table is refused before any write starts
+    fmt.merge_upsert_bucketed("docs", good, "k", num_buckets=4)
+    with pytest.raises(ValueError, match="bucketed layout"):
+        fmt.commit({"fresh": good}, appends={"docs": good})
+    assert not (tmp_path / "store" / "data" / "fresh").exists()
+
+
+def test_commit_writes_stay_in_callers_job_group(spark, tmp_path):
+    """commit runs each table write on its own thread; the caller's job
+    group must carry over to those threads, or per-operation job counts
+    (test_enqueue_job_budget, the benchmark's attribution) read 0."""
+    import uuid
+
+    from openslack_crawler_spark.sources.table_format import SnapshotParquetFormat
+
+    fmt = SnapshotParquetFormat(str(tmp_path / "store"), spark)
+    sc = spark.sparkContext
+    group = f"commit-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fmt.commit(
+            {"a": spark.range(10), "b": spark.range(20)},
+            appends={"c": spark.range(30)},
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) >= 3
+    assert [fmt.read(t).count() for t in "abc"] == [10, 20, 30]
+
+
 def test_message_sinks_plans_and_selection(spark, tmp_path):
     """S13/S17 dedicated sinks (round-3 verdict #6): wire-shape plans
     (routing_key '<spider>:items'; flume headers+body events) and the
